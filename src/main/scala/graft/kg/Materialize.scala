@@ -1,6 +1,7 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -12,19 +13,27 @@ import org.apache.spark.sql.functions._
  * change — the sandbox ships no Iceberg jars, see SURVEY.md §7):
  *
  *   staging/   bucket=K/err=B/...   one pass of the parse kernel, the
- *                                   resumable unit of work
+ *                                   resumable unit of work, one file per
+ *                                   (bucket, err) directory
  *   nodes/                          distinct terms: id, kind, value, lang, dt
  *   edges/                          subj_id, pred, obj_id + lineage
- *   metrics/                        per-document lineage + counts + sha256
- *   manifest/                       per-bucket checkpoint rows
+ *   metrics/   run=R/...            per-document lineage + counts + sha256
+ *                                   + bucket, one file set per run
+ *   manifest/                       checkpoint rows (bucket, n_docs, run),
+ *                                   one appended file per run
  *
  * Resume contract (E8): work is sharded into `buckets` by a hash of the
- * document identity (repo, path, commit). A bucket appears in `manifest`
- * only after its staging output is fully written, so a crashed/killed job
- * re-runs exactly the missing buckets: the corpus is anti-joined against
- * the manifest before any parsing happens. Staging writes use dynamic
- * partition overwrite, making a re-run of a half-written bucket
- * idempotent.
+ * document identity (repo, path, commit). A run's buckets appear in
+ * `manifest` only after its staging, nodes, edges and metrics outputs are
+ * fully written, so a crashed/killed job re-runs exactly the missing
+ * buckets: the corpus is anti-joined against the manifest before any
+ * parsing happens. Staging and metrics writes use dynamic partition
+ * overwrite, making a re-run of a half-written bucket or run idempotent;
+ * nodes and edges are rebuilt from all of staging on every run. A run is
+ * named by its smallest bucket R, unique among committed runs because
+ * their bucket sets are disjoint. Each run first deletes every
+ * `metrics/run=R` without a manifest row, the only state a crash between
+ * the metrics write and the manifest append can leave.
  */
 object Materialize {
 
@@ -231,6 +240,8 @@ object Materialize {
       .na.fill(0L, Seq("n_triples", "n_errors"))
   }
 
+  private val manifestSchema = "bucket BIGINT, n_docs BIGINT, run BIGINT"
+
   /**
    * Full materialization run with resume. Returns the number of buckets
    * actually processed in this invocation (0 == nothing left to do).
@@ -240,30 +251,51 @@ object Materialize {
     import spark.implicits._
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    val withBucket = corpus.toDF().withColumn("bucket", bucketOf(buckets))
+    // ---- committed (bucket, run) pairs. A missing manifest means a fresh
+    // build; any other read failure propagates rather than silently
+    // re-parsing and overwriting every bucket
     val manifestPath = s"$outDir/manifest"
-    val done: DataFrame =
-      try spark.read.parquet(manifestPath).select("bucket").distinct()
-      catch { case _: Exception => spark.emptyDataset[Long].toDF("bucket") }
+    val metricsDir = new Path(s"$outDir/metrics")
+    val fs = metricsDir.getFileSystem(spark.sessionState.newHadoopConf())
+    val committed =
+      if (!fs.exists(new Path(manifestPath))) Array.empty[(Long, Long)]
+      else spark.read.schema(manifestSchema).parquet(manifestPath)
+        .select("bucket", "run").as[(Long, Long)].collect()
 
+    // ---- sweep metrics of runs that crashed before their manifest append
+    val runs = committed.map(_._2).toSet
+    if (fs.exists(metricsDir))
+      fs.listStatus(metricsDir).map(_.getPath)
+        .filter(p => p.getName.startsWith("run=") && !runs(p.getName.stripPrefix("run=").toLong))
+        .foreach(fs.delete(_, true))
+
+    val withBucket = corpus.toDF().withColumn("bucket", bucketOf(buckets))
+    val done = committed.map(_._1).distinct.toSeq.toDF("bucket")
     val todo = withBucket.join(broadcast(done), Seq("bucket"), "left_anti")
     val todoBuckets = todo.select("bucket").distinct().as[Long].collect().sorted
     if (todoBuckets.isEmpty) return 0
+    val run = todoBuckets.head
 
-    // ---- parse (single pass) -> staging, partitioned by (bucket, err)
+    // ---- parse (single pass) -> staging, partitioned by (bucket, err).
+    // Clustering the documents by bucket first makes each staging
+    // directory the output of one task: one file per (bucket, err), and
+    // at most `buckets` parse tasks.
     // native generator path: no object-serde boundary (see ParseNtLines)
-    val parsed = TripleExtract.parseExpr(todo.drop("bucket"))
+    val parsed = TripleExtract.parseExpr(todo.repartition(col("bucket")).drop("bucket"))
       .withColumn("bucket", bucketOf(buckets))
-    parsed.write.mode(SaveMode.Overwrite)
+    val firstErr = Observation("firstErr")
+    parsed
+      .observe(firstErr, min(when(col("err"), struct(col("repo"), col("path"),
+        col("commit"), col("line"), col("charPos"), col("message")))).as("e"))
+      .write.mode(SaveMode.Overwrite)
       .partitionBy("bucket", "err")
       .parquet(s"$outDir/staging")
 
+    // the smallest (repo, path, commit, line) error, seen by the write itself
     if (strict) {
-      val firstErr = readStaging(spark, outDir).filter(col("err"))
-        .select("repo", "path", "commit", "line", "charPos", "message")
-        .limit(1).collect()
-      if (firstErr.nonEmpty)
-        throw new IllegalStateException(s"strict mode: ${firstErr.head.mkString(" | ")}")
+      val e = firstErr.get("e").asInstanceOf[Row]
+      if (e != null)
+        throw new IllegalStateException(s"strict mode: ${e.mkString(" | ")}")
     }
 
     // ---- derive graph tables from ALL staged triples (cheap vs parse)
@@ -282,14 +314,18 @@ object Materialize {
     val stagedTodo = staged.filter(col("bucket").isin(todoBuckets: _*))
     metrics(todo.drop("bucket"), stagedTodo)
       .withColumn("bucket", bucketOf(buckets))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"$outDir/metrics") // dynamic overwrite: idempotent on re-run
+      .withColumn("run", lit(run))
+      .repartition(col("bucket"))
+      .write.mode(SaveMode.Overwrite).partitionBy("run")
+      .parquet(metricsDir.toString) // dynamic overwrite: replaces run=R only
 
-    // ---- commit the checkpoint LAST: bucket-level manifest rows
+    // ---- commit the checkpoint LAST: one appended file of this run's rows
     withBucket
       .filter(col("bucket").isin(todoBuckets: _*))
       .groupBy("bucket").agg(count(lit(1)).as("n_docs"))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(manifestPath)
+      .withColumn("run", lit(run))
+      .coalesce(1)
+      .write.mode(SaveMode.Append).parquet(manifestPath)
 
     todoBuckets.length
   }

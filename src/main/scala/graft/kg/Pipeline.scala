@@ -7,7 +7,13 @@ import org.apache.spark.sql.SparkSession
  *
  *   corpus (parquet/table) -> [slice+parse kernel] -> staging{triples,errors}
  *     -> [skolemize] -> [canonicalize/link] -> nodes + edges tables
- *     + manifest checkpoint + per-document metrics
+ *     + per-document metrics (metrics/run=R, one file set per run)
+ *     + manifest checkpoint (one appended file per run, written last)
+ *
+ * Staging and metrics use dynamic partition overwrite, so a re-run
+ * replaces only the buckets and the run it redoes; metrics of a run that
+ * crashed before its manifest append are swept at the start of the next
+ * run (see Materialize).
  *
  * Usage:
  *   Pipeline <corpusParquetPath|synth:N:L> <outDir> [buckets] [strict]

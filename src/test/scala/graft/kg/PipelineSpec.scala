@@ -100,12 +100,17 @@ class PipelineSpec extends AnyFunSuite {
     // resume: everything is checkpointed, second run is a no-op
     val n2 = Materialize.run(spark, corpus, dir, buckets = 8)
     assert(n2 == 0)
-    // partial manifest -> only missing buckets processed
+    // partial manifest -> only missing buckets processed. The fixture is
+    // one run's file of its three smallest buckets, so its run id (the
+    // smallest bucket) stays that run's own
     val dir2 = Files.createTempDirectory("graft-mat2").toString
-    spark.read.parquet(s"$dir/manifest").limit(3)
-      .write.partitionBy("bucket").parquet(s"$dir2/manifest")
+    spark.read.parquet(s"$dir/manifest").orderBy("bucket").limit(3)
+      .coalesce(1).write.parquet(s"$dir2/manifest")
     val n3 = Materialize.run(spark, corpus, dir2, buckets = 8)
     assert(n3 == n1 - 3)
+    // over the two-run manifest nothing is left to do
+    assert(Materialize.run(spark, corpus, dir2, buckets = 8) == 0)
+    assert(spark.read.parquet(s"$dir2/manifest").select("run").distinct().count() == 2)
   }
 
   test("metrics carry the per-document content sha256 invariant") {
@@ -365,11 +370,15 @@ class PipelineSpec extends AnyFunSuite {
     assert(e.getMessage.contains("strict mode") && e.getMessage.contains("bad.nt"))
     // clean corpus passes
     TripleExtract.failOnErrors(TripleExtract.parse(bad.filter(_.path == "ok.nt")))
-    // Materialize strict mode refuses too
+    // Materialize strict mode refuses too, naming the smallest
+    // (repo, path, commit, line) error of the run
     val dir = Files.createTempDirectory("graft-strict").toString
-    intercept[IllegalStateException] {
-      Materialize.run(spark, bad, dir, buckets = 2, strict = true)
+    val twoBad = bad.union(Seq(
+      CorpusRow("r", "a-bad.nt", "c", "nt", "<a:b> <c:d> <e:f> .\nnope\nnope")).toDS())
+    val me = intercept[IllegalStateException] {
+      Materialize.run(spark, twoBad, dir, buckets = 2, strict = true)
     }
+    assert(me.getMessage.startsWith("strict mode: r | a-bad.nt | c | 2 | "), me.getMessage)
   }
 
   test("bucketed edges table: subject self-join plans without a shuffle") {
