@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
  * this one object so swapping in a real Iceberg catalog is a config
  * change — the sandbox ships no Iceberg jars, see SURVEY.md §7):
  *
- *   staging/   bucket=K/err=B/...   one pass of the parse kernel, the
- *                                   resumable unit of work, one file per
- *                                   (bucket, err) directory
+ *   staging/   run=R/err=B/...      one pass of the parse kernel, one file
+ *                                   set per run: each corpus scan task
+ *                                   writes one file per err directory
  *   nodes/                          distinct terms: id, kind, value, lang, dt
  *   edges/                          subj_id, pred, obj_id + lineage
  *   metrics/   run=R/...            per-document lineage + counts + sha256
@@ -27,13 +27,15 @@ import org.apache.spark.sql.functions._
  * `manifest` only after its staging, nodes, edges and metrics outputs are
  * fully written, so a crashed/killed job re-runs exactly the missing
  * buckets: the corpus is anti-joined against the manifest before any
- * parsing happens. Staging and metrics writes use dynamic partition
- * overwrite, making a re-run of a half-written bucket or run idempotent;
- * nodes and edges are rebuilt from all of staging on every run. A run is
- * named by its smallest bucket R, unique among committed runs because
- * their bucket sets are disjoint. Each run first deletes every
- * `metrics/run=R` without a manifest row, the only state a crash between
- * the metrics write and the manifest append can leave.
+ * parsing happens. A run is named by its smallest todo bucket R, unique
+ * among committed runs because their bucket sets are disjoint, and never
+ * a committed run id itself. Each run first deletes every `staging/run=R`
+ * and `metrics/run=R` without a manifest row — all a crash can leave
+ * behind — so a crashed run's rows never reach nodes or edges, and its
+ * buckets are parsed again under the new run. Staging and metrics writes
+ * use dynamic partition overwrite (a write option; the session's setting
+ * is left alone), so a run replaces only its own `run=R`; nodes and edges
+ * are rebuilt from all of staging on every run.
  */
 object Materialize {
 
@@ -249,12 +251,12 @@ object Materialize {
   def run(spark: SparkSession, corpus: Dataset[CorpusRow], outDir: String,
           buckets: Int = 64, strict: Boolean = false): Int = {
     import spark.implicits._
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     // ---- committed (bucket, run) pairs. A missing manifest means a fresh
     // build; any other read failure propagates rather than silently
     // re-parsing and overwriting every bucket
     val manifestPath = s"$outDir/manifest"
+    val stagingDir = new Path(s"$outDir/staging")
     val metricsDir = new Path(s"$outDir/metrics")
     val fs = metricsDir.getFileSystem(spark.sessionState.newHadoopConf())
     val committed =
@@ -262,34 +264,35 @@ object Materialize {
       else spark.read.schema(manifestSchema).parquet(manifestPath)
         .select("bucket", "run").as[(Long, Long)].collect()
 
-    // ---- sweep metrics of runs that crashed before their manifest append
+    // ---- sweep staging and metrics of runs that crashed before their
+    // manifest append
     val runs = committed.map(_._2).toSet
-    if (fs.exists(metricsDir))
-      fs.listStatus(metricsDir).map(_.getPath)
+    for (dir <- Seq(stagingDir, metricsDir) if fs.exists(dir))
+      fs.listStatus(dir).map(_.getPath)
         .filter(p => p.getName.startsWith("run=") && !runs(p.getName.stripPrefix("run=").toLong))
         .foreach(fs.delete(_, true))
 
-    val withBucket = corpus.toDF().withColumn("bucket", bucketOf(buckets))
+    // ---- one probe of the todo corpus: its buckets, the run id R (the
+    // smallest of them, never a committed run id) and the manifest rows
     val done = committed.map(_._1).distinct.toSeq.toDF("bucket")
-    val todo = withBucket.join(broadcast(done), Seq("bucket"), "left_anti")
-    val todoBuckets = todo.select("bucket").distinct().as[Long].collect().sorted
-    if (todoBuckets.isEmpty) return 0
-    val run = todoBuckets.head
+    val todo = corpus.toDF().withColumn("bucket", bucketOf(buckets))
+      .join(broadcast(done), Seq("bucket"), "left_anti")
+    val todoCounts = todo.groupBy("bucket").agg(count(lit(1)))
+      .as[(Long, Long)].collect().sorted
+    if (todoCounts.isEmpty) return 0
+    val run = todoCounts.head._1
 
-    // ---- parse (single pass) -> staging, partitioned by (bucket, err).
-    // Clustering the documents by bucket first makes each staging
-    // directory the output of one task: one file per (bucket, err), and
-    // at most `buckets` parse tasks.
+    // ---- parse (single pass, as wide as the corpus scan) -> staging,
+    // partitioned by (run, err): each scan task writes one file per err
     // native generator path: no object-serde boundary (see ParseNtLines)
-    val parsed = TripleExtract.parseExpr(todo.repartition(col("bucket")).drop("bucket"))
-      .withColumn("bucket", bucketOf(buckets))
+    val parsed = TripleExtract.parseExpr(todo.drop("bucket")).withColumn("run", lit(run))
     val firstErr = Observation("firstErr")
     parsed
       .observe(firstErr, min(when(col("err"), struct(col("repo"), col("path"),
         col("commit"), col("line"), col("charPos"), col("message")))).as("e"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket", "err")
-      .parquet(s"$outDir/staging")
+      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy("run", "err")
+      .parquet(stagingDir.toString)
 
     // the smallest (repo, path, commit, line) error, seen by the write itself
     if (strict) {
@@ -311,22 +314,20 @@ object Materialize {
     // ---- metrics for the documents processed in THIS run: counted from
     // the STAGED rows, not the live parse plan — re-evaluating `parsed`
     // here would parse the whole todo corpus a second time
-    val stagedTodo = staged.filter(col("bucket").isin(todoBuckets: _*))
-    metrics(todo.drop("bucket"), stagedTodo)
+    metrics(todo.drop("bucket"), staged.filter(col("run") === run))
       .withColumn("bucket", bucketOf(buckets))
       .withColumn("run", lit(run))
       .repartition(col("bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("run")
-      .parquet(metricsDir.toString) // dynamic overwrite: replaces run=R only
+      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy("run")
+      .parquet(metricsDir.toString) // replaces run=R only
 
     // ---- commit the checkpoint LAST: one appended file of this run's rows
-    withBucket
-      .filter(col("bucket").isin(todoBuckets: _*))
-      .groupBy("bucket").agg(count(lit(1)).as("n_docs"))
-      .withColumn("run", lit(run))
+    todoCounts.toSeq.map { case (bucket, n) => (bucket, n, run) }
+      .toDF("bucket", "n_docs", "run")
       .coalesce(1)
       .write.mode(SaveMode.Append).parquet(manifestPath)
 
-    todoBuckets.length
+    todoCounts.length
   }
 }

@@ -6,14 +6,16 @@ import org.apache.spark.sql.SparkSession
  * spark-submit entry for the full KG-construction pipeline:
  *
  *   corpus (parquet/table) -> [slice+parse kernel] -> staging{triples,errors}
+ *     (staging/run=R, one file set per run, parsed straight off the scan)
  *     -> [skolemize] -> [canonicalize/link] -> nodes + edges tables
  *     + per-document metrics (metrics/run=R, one file set per run)
  *     + manifest checkpoint (one appended file per run, written last)
  *
- * Staging and metrics use dynamic partition overwrite, so a re-run
- * replaces only the buckets and the run it redoes; metrics of a run that
- * crashed before its manifest append are swept at the start of the next
- * run (see Materialize).
+ * Staging and metrics are written with dynamic partition overwrite (a
+ * write option, not a session setting), so a re-run replaces only the
+ * run it redoes; staging and metrics of a run that crashed before its
+ * manifest append are swept at the start of the next run (see
+ * Materialize).
  *
  * Usage:
  *   Pipeline <corpusParquetPath|synth:N:L> <outDir> [buckets] [strict]
@@ -31,7 +33,6 @@ object Pipeline {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
     master.foreach(b.master)
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -222,6 +222,46 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"), plan.take(500))
   }
 
+  test("Materialize.run parses straight off the corpus scan into staging, no shuffle") {
+    // the staging write is the widest stage of a build: a shuffle of the
+    // corpus ahead of the parse costs a full copy of the raw documents and
+    // caps the parse at the shuffle's width. Two runs, so the second plans
+    // the broadcast anti-join on a non-empty manifest
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.kg.{Corpus, Materialize}
+    object plans extends AdaptiveSparkPlanHelper
+    val stagingPlans = new LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.collect(qe.executedPlan) {
+          case w: DataWritingCommandExec if (w.cmd match {
+            case i: InsertIntoHadoopFsRelationCommand => i.outputPath.getName == "staging"
+            case _ => false
+          }) => w
+        }.foreach(stagingPlans.put)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = java.nio.file.Files.createTempDirectory("graft-staging-plan").toString
+      val corpus = Corpus.synthetic(spark, nDocs = 40, linesPerDoc = 25)
+      assert(Materialize.run(spark, corpus.filter(Materialize.bucketOf(8) < 4), out, 8) > 0)
+      assert(Materialize.run(spark, corpus, out, 8) > 0)
+      (1 to 2).foreach { i =>
+        val plan = stagingPlans.poll(60, TimeUnit.SECONDS)
+        assert(plan != null, s"staging write $i not seen")
+        assert(plans.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
+          s"staging write $i shuffles:\n$plan")
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("SPARQL ORDER BY + LIMIT plans as TakeOrderedAndProject, not a global sort") {
     // per-partition top-k then one merge — the only slice shape that
     // survives a 100 TB input; a global Sort before the limit would be

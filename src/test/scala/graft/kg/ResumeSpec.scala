@@ -44,6 +44,14 @@ class ResumeSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/manifest").agg(sum("n_docs")).head().getLong(0) == docs)
   }
 
+  /** The `run=*` directories under staging are exactly the committed runs:
+    * no crashed run's staging survives the sweep. */
+  private def assertStagingRunsCommitted(dir: String): Unit = {
+    val staged = new File(s"$dir/staging").list().filter(_.startsWith("run="))
+      .map(_.stripPrefix("run=").toLong).toSet
+    assert(staged == spark.read.parquet(s"$dir/manifest").select("run").as[Long].collect().toSet)
+  }
+
   private lazy val ref: String = {
     val dir = tmp("graft-ref")
     assert(Materialize.run(spark, corpus, dir, Buckets) > 0)
@@ -54,6 +62,7 @@ class ResumeSpec extends AnyFunSuite {
     assert(Materialize.run(spark, corpus, dir, Buckets) > 0, state)
     assert(tables(dir) == tables(ref), state)
     assertOneMetricsRowPerDoc(dir, nDocs)
+    assertStagingRunsCommitted(dir)
     assert(Materialize.run(spark, corpus, dir, Buckets) == 0, state)
   }
 
@@ -68,10 +77,15 @@ class ResumeSpec extends AnyFunSuite {
     copyTree(ref, dir)
     deleteTree(s"$dir/manifest")
     // a re-run over the upper buckets names itself differently from the
-    // crashed run; its metrics must not sit next to the crashed run's
+    // crashed run; neither its metrics nor its nodes and edges may hold
+    // the crashed run's rows
     val upper = corpus.filter(Materialize.bucketOf(Buckets) >= Buckets / 2)
     assert(Materialize.run(spark, upper, dir, Buckets) > 0)
     assertOneMetricsRowPerDoc(dir, upper.count())
+    assertStagingRunsCommitted(dir)
+    val upperRef = tmp("graft-crash-b-upper")
+    assert(Materialize.run(spark, upper, upperRef, Buckets) > 0)
+    assert(tables(dir) == tables(upperRef))
     recover(dir, "everything but the manifest")
   }
 
@@ -94,6 +108,24 @@ class ResumeSpec extends AnyFunSuite {
     assert(tables(dir) == tables(ref))
     assertOneMetricsRowPerDoc(dir, nDocs)
     assert(spark.read.parquet(s"$dir/manifest").select("run").distinct().count() == 2)
+    assertStagingRunsCommitted(dir)
+  }
+
+  test("run leaves the session's partition overwrite mode alone") {
+    // two runs into one directory: a static overwrite of staging or
+    // metrics would drop the first run's rows
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val dir = tmp("graft-static")
+      assert(Materialize.run(spark, corpus.filter(Materialize.bucketOf(Buckets) < Buckets / 2),
+        dir, Buckets) > 0)
+      assert(Materialize.run(spark, corpus, dir, Buckets) > 0)
+      assert(spark.conf.get(key) == "static")
+      assert(tables(dir) == tables(ref))
+      assertStagingRunsCommitted(dir)
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("an unreadable manifest fails the run instead of rebuilding") {
